@@ -1,8 +1,11 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardOpenOption}
+import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 
 /** Producer/admin API for the graftlog broker emulation (reference:
@@ -116,7 +119,7 @@ object GraftLog {
     monitor.synchronized {
       val pdir = Paths.get(dir, s"p=$p")
       Files.createDirectories(pdir)
-      val ch = java.nio.channels.FileChannel.open(pdir.resolve(".lock"),
+      val ch = FileChannel.open(pdir.resolve(".lock"),
         StandardOpenOption.CREATE, StandardOpenOption.WRITE)
       try {
         val lock = ch.lock()
@@ -216,12 +219,9 @@ object GraftLog {
     * and the next record never concatenates onto torn bytes. */
   private def sealTornTail(f: Path): Unit =
     if (Files.exists(f) && Files.size(f) > 0) {
-      val ch = java.nio.channels.FileChannel.open(f, StandardOpenOption.READ)
+      val ch = FileChannel.open(f, StandardOpenOption.READ)
       try {
-        ch.position(Files.size(f) - 1)
-        val bb = java.nio.ByteBuffer.allocate(1)
-        ch.read(bb)
-        if (bb.get(0) != '\n'.toByte)
+        if (readAt(ch, Files.size(f) - 1, 1)(0) != '\n'.toByte)
           Files.write(f, "\n".getBytes(StandardCharsets.UTF_8), StandardOpenOption.APPEND)
       } finally ch.close()
     }
@@ -233,7 +233,9 @@ object GraftLog {
   def baseOffset(dir: String, p: Int): Long = currentLog(dir, p)._1
 
   /** Current end offsets (base + line counts) per partition — the high
-    * watermark (pspf/log/interfaces.py high-watermark surface).
+    * watermark (pspf/log/interfaces.py high-watermark surface). A line
+    * counts once its '\n' lands: the unterminated tail of an in-flight
+    * append is not yet a record. Counting is incremental (`indexed`).
     * Resolve+count retries on NoSuchFileException like the partition
     * reader does: a concurrent trim can rename the generation away
     * between the cache hit and the open — re-resolving finds the new
@@ -250,15 +252,9 @@ object GraftLog {
           var out = -1L
           while (out < 0) {
             val (base, f) = currentLog(dir, part)
-            try out = base + (if (Files.exists(f))
-              scala.util.Using.resource(Files.lines(f))(_.count()) else 0L)
+            try out = base + (if (Files.exists(f)) indexed(f).lines else 0L)
             catch {
-              case e: java.io.UncheckedIOException
-                if e.getCause.isInstanceOf[java.nio.file.NoSuchFileException] =>
-                logCache.remove((dir, part))
-                attempt += 1
-                if (attempt > 5) throw e
-              case e: java.nio.file.NoSuchFileException =>
+              case e: NoSuchFileException =>
                 logCache.remove((dir, part))
                 attempt += 1
                 if (attempt > 5) throw e
@@ -267,6 +263,149 @@ object GraftLog {
           part -> out
         }.toMap
     }
+  }
+
+  /** File line `line` of generation `file` (base offset `base`) starts
+    * at byte `pos`: a reader starting at or after that line seeks there
+    * and skips only the lines between it and its start. Validated
+    * before use — see `openLines`. */
+  final case class SeekHint(file: String, base: Long, line: Long, pos: Long)
+
+  /** Driver-side scan state of one log file. `bytes` is the position
+    * after its last '\n' and `lines` the line count up to it; `tail`
+    * holds the bytes just before `bytes`, so a file replaced at the same
+    * path (purge and re-create, possibly reusing the inode) is caught
+    * and recounted. `marks` is the sparse (line, byte) seek index — one
+    * mark per `stride` bytes — and `ends` the recently published ends,
+    * which are exactly where the next micro-batches start. */
+  private final class LogIndex(val key: AnyRef, val bytes: Long, val lines: Long,
+                               val tail: Array[Byte], val stride: Long,
+                               val marks: Vector[(Long, Long)],
+                               val ends: Vector[(Long, Long)]) {
+    /** The nearest known line start at or below file line `line`. */
+    def markAtOrBelow(line: Long): (Long, Long) =
+      (marks.iterator ++ ends.iterator).filter(_._1 <= line).maxByOption(_._1)
+        .getOrElse((0L, 0L))
+  }
+
+  // initial mark stride (bytes); it doubles whenever a file would need
+  // more than MaxMarks marks, so one file's index stays bounded, and
+  // retiring a generation drops its entry, so the cache holds live
+  // files only
+  private final val IndexStride = 1L << 20
+  private final val MaxMarks = 1024
+  private final val RecentEnds = 8
+  private final val TailCheck = 64
+  private final val ScanChunk = 1 << 16
+
+  private val emptyIndex =
+    new LogIndex(null, 0L, 0L, Array.emptyByteArray, IndexStride, Vector.empty, Vector.empty)
+
+  private val indexes = new java.util.concurrent.ConcurrentHashMap[Path, LogIndex]()
+
+  /** Count `f` incrementally: stat it and scan only the bytes appended
+    * since the cached end. A changed file identity, a shrunken size or
+    * a tail that no longer matches rescans from byte 0 — a fresh JVM
+    * pays that one full scan, every later call O(new bytes). */
+  private def indexed(f: Path): LogIndex = {
+    val attrs = Files.readAttributes(f, classOf[BasicFileAttributes])
+    indexes.compute(f, (_, prev) => extend(f, attrs.fileKey(), attrs.size(), prev))
+  }
+
+  private def extend(f: Path, key: AnyRef, size: Long, prev: LogIndex): LogIndex =
+    scala.util.Using.resource(FileChannel.open(f, StandardOpenOption.READ)) { ch =>
+      val from =
+        if (prev != null && prev.key == key && prev.bytes <= size &&
+          java.util.Arrays.equals(readAt(ch, prev.bytes - prev.tail.length, prev.tail.length),
+            prev.tail)) prev
+        else emptyIndex
+      var lines = from.lines
+      var end = from.bytes
+      var stride = from.stride
+      val marks = scala.collection.mutable.ArrayBuffer.from(from.marks)
+      var nextMark = marks.lastOption.fold(stride)(m => (m._2 / stride + 1) * stride)
+      val chunk = new Array[Byte](ScanChunk)
+      var pos = from.bytes
+      var n = 0
+      while (pos < size && {
+        n = ch.read(ByteBuffer.wrap(chunk, 0, math.min(ScanChunk.toLong, size - pos).toInt), pos)
+        n > 0
+      }) {
+        var i = 0
+        while (i < n) {
+          if (chunk(i) == '\n') {
+            lines += 1
+            end = pos + i + 1
+            if (end >= nextMark) {
+              marks += ((lines, end))
+              if (marks.length > MaxMarks) {
+                val kept = marks.indices.collect { case j if j % 2 == 1 => marks(j) }
+                marks.clear()
+                marks ++= kept
+                stride *= 2
+              }
+              nextMark = (end / stride + 1) * stride
+            }
+          }
+          i += 1
+        }
+        pos += n
+      }
+      if (end == from.bytes && from.ends.nonEmpty) from // nothing new landed
+      else new LogIndex(key, end, lines,
+        readAt(ch, math.max(0L, end - TailCheck), math.min(end, TailCheck.toLong).toInt),
+        stride, marks.toVector, (from.ends :+ (lines -> end)).takeRight(RecentEnds))
+    }
+
+  private def readAt(ch: FileChannel, pos: Long, len: Int): Array[Byte] = {
+    val bb = ByteBuffer.allocate(len)
+    while (bb.hasRemaining && ch.read(bb, pos + bb.position()) > 0) ()
+    bb.array()
+  }
+
+  /** The seek hint for reading generation (`base`, `f`) from absolute
+    * offset `startLine`: the nearest indexed line start at or below it,
+    * if this JVM has counted the file. */
+  private[sources] def seekHint(f: Path, base: Long, startLine: Long): Option[SeekHint] =
+    Option(indexes.get(f)).map { ix =>
+      val (line, pos) = ix.markAtOrBelow(startLine - base)
+      SeekHint(f.toString, base, line, pos)
+    }
+
+  /** Open `f` positioned at the start of file line `line`, seeking to
+    * `mark` = (line, byte) when it is usable: at or below `line`, and
+    * the byte before it a '\n' (or at byte 0). Otherwise — a stale or
+    * foreign mark — skip from byte 0. '\n' is the only terminator, the
+    * same rule `indexed` counts by. */
+  private[sources] def openLines(f: Path, line: Long, mark: (Long, Long)): LogLines = {
+    val ch = FileChannel.open(f, StandardOpenOption.READ)
+    try {
+      val (markLine, markPos) = mark
+      val usable = markLine <= line &&
+        (markPos == 0 || readAt(ch, markPos - 1, 1)(0) == '\n'.toByte)
+      val lines = if (usable) new LogLines(ch, markPos) else new LogLines(ch, 0L)
+      var skip = if (usable) line - markLine else line
+      while (skip > 0 && lines.next()) skip -= 1
+      lines
+    } catch { case e: Throwable => ch.close(); throw e }
+  }
+
+  /** Drop every cached scan of the files under `dir` — a purged topic's
+    * files are gone, and a re-created one must be counted afresh. */
+  private[graft] def forget(dir: String): Unit = {
+    val root = Paths.get(dir)
+    indexes.keySet().removeIf(_.startsWith(root))
+  }
+
+  /** Clear the whole scan cache, as in a fresh JVM (tests only). */
+  private[sources] def resetIndex(): Unit = indexes.clear()
+
+  /** Files the scan cache currently holds (tests only). */
+  private[sources] def indexedFiles: Set[Path] = indexes.keySet().asScala.toSet
+
+  private def retire(f: Path): Unit = {
+    Files.deleteIfExists(f)
+    indexes.remove(f)
   }
 
   /** Retention trim (reference: LocalLog age-based cleanup,
@@ -288,26 +427,29 @@ object GraftLog {
         // trim that actually drops lines
         val logs = listLogs(dir, p)
         logs.maxByOption(_._1).foreach { case (base, f) =>
-          logs.filter(_._2 != f).foreach(g => Files.deleteIfExists(g._2))
-          Files.deleteIfExists(f.getParent.resolve("log.jsonl.tmp"))
-          val total = scala.util.Using.resource(Files.lines(f))(_.count())
-          val drop = math.min(math.max(0L, target - base), total)
+          logs.filter(_._2 != f).foreach(g => retire(g._2))
+          val tmp = f.getParent.resolve("log.jsonl.tmp")
+          Files.deleteIfExists(tmp)
+          val ix = indexed(f)
+          val drop = math.min(math.max(0L, target - base), ix.lines)
           if (drop > 0) {
             val newBase = base + drop
-            val tmp = f.getParent.resolve("log.jsonl.tmp")
-            // stream the survivor suffix — never the whole log in heap
+            // copy the survivor suffix byte for byte — never the whole
+            // log in heap — from the first kept line, found by seeking
+            // to the index mark below it
+            val from = scala.util.Using.resource(openLines(f, drop, ix.markAtOrBelow(drop)))(_.position)
             scala.util.Using.resources(
-              Files.newBufferedReader(f, StandardCharsets.UTF_8),
-              Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)) { (r, w) =>
-              var skipped = 0L
-              while (skipped < drop && r.readLine() != null) skipped += 1
-              var ln = r.readLine()
-              while (ln != null) { w.write(ln); w.write("\n"); ln = r.readLine() }
+              FileChannel.open(f, StandardOpenOption.READ),
+              FileChannel.open(tmp, StandardOpenOption.CREATE, StandardOpenOption.WRITE,
+                StandardOpenOption.TRUNCATE_EXISTING)) { (in, out) =>
+              val size = in.size()
+              var pos = from
+              while (pos < size) pos += in.transferTo(pos, size - pos, out)
             }
             Files.move(tmp, f.getParent.resolve(s"log-$newBase.jsonl"),
               java.nio.file.StandardCopyOption.REPLACE_EXISTING,
               java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            Files.deleteIfExists(f)
+            retire(f)
             logCache.remove((dir, p))
           }
         }
@@ -417,4 +559,62 @@ object GraftLog {
     counts.toSeq.sortBy(_._1).foreach { case (p, n) => node.put(p.toString, n) }
     mapper.writeValueAsString(node)
   }
+}
+
+/** Forward reader of '\n'-terminated log lines from a byte position,
+  * for the partition reader and the trim survivor copy; `indexed`
+  * counts lines by the same rule. An unterminated tail (an append still in
+  * flight, or a crash leftover not yet sealed) is never returned. After
+  * `next()` the line is `bytes(lineOff until lineOff + lineLen)`, valid
+  * until the following call. */
+private[sources] final class LogLines(ch: FileChannel, start: Long) extends AutoCloseable {
+  private var buf = new Array[Byte](1 << 16)
+  private var lo = 0 // first unconsumed byte in buf
+  private var hi = 0 // end of valid bytes in buf
+  private var filePos = start // file position of buf(hi)
+  var lineOff = 0
+  var lineLen = 0
+  def bytes: Array[Byte] = buf
+
+  /** File position of the first byte not yet returned as a line. */
+  def position: Long = filePos - (hi - lo)
+
+  def next(): Boolean = {
+    var i = lo
+    while (true) {
+      while (i < hi) {
+        if (buf(i) == '\n') {
+          lineOff = lo
+          lineLen = i - lo
+          lo = i + 1
+          return true
+        }
+        i += 1
+      }
+      val scanned = i - lo
+      if (!fill()) return false
+      i = lo + scanned
+    }
+    false
+  }
+
+  // compact the pending partial line to the front (growing the buffer
+  // for a line longer than it) and read more; false at end of file
+  private def fill(): Boolean = {
+    if (lo > 0) {
+      System.arraycopy(buf, lo, buf, 0, hi - lo)
+      hi -= lo
+      lo = 0
+    }
+    if (hi == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+    val n = ch.read(ByteBuffer.wrap(buf, hi, buf.length - hi), filePos)
+    if (n <= 0) false
+    else {
+      hi += n
+      filePos += n
+      true
+    }
+  }
+
+  override def close(): Unit = ch.close()
 }

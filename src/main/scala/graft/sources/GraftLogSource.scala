@@ -11,8 +11,6 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** DataSource V2 for graftlog topics: `spark.read[Stream]
@@ -85,11 +83,14 @@ final class GraftLogScan(path: String, maxRecordsPerTrigger: Option[Long] = None
 object GraftLogScan {
   def plan(path: String, start: Map[Int, Long], end: Map[Int, Long]): Array[InputPartition] =
     end.toSeq.sortBy(_._1).flatMap { case (p, endLine) =>
+      val (base, f) = GraftLog.currentLog(path, p)
       // clamp to the retention base: offsets below it are trimmed away,
       // so a fresh consumer starts at the earliest retained record
       // instead of planning empty reads over the trimmed range
-      val startLine = math.max(start.getOrElse(p, 0L), GraftLog.baseOffset(path, p))
-      if (endLine > startLine) Some(GraftLogInputPartition(path, p, startLine, endLine))
+      val startLine = math.max(start.getOrElse(p, 0L), base)
+      if (endLine > startLine)
+        Some(GraftLogInputPartition(path, p, startLine, endLine,
+          GraftLog.seekHint(f, base, startLine)))
       else None
     }.toArray
 }
@@ -98,11 +99,13 @@ case class GraftLogOffset(counts: Map[Int, Long]) extends Offset {
   override def json(): String = GraftLog.offsetJson(counts)
 }
 
-/** Micro-batch leg: latestOffset re-lists the log; each trigger reads
-  * the [committed, latest) slice per partition. `commit` is a no-op —
-  * the checkpoint's offset log is the committed consumer position (a
-  * broker-side trim job would hook retention there, like LocalLog's
-  * age-based cleanup, pspf/log/local_log.py:254-266).
+/** Micro-batch leg: latestOffset counts only the bytes appended since
+  * the previous call (GraftLog.latestOffsets keeps a per-file index);
+  * each trigger reads the [committed, latest) slice per partition, each
+  * reader seeking near its start through the index's hint. `commit` is
+  * a no-op — the checkpoint's offset log is the committed consumer
+  * position (a broker-side trim job would hook retention there, like
+  * LocalLog's age-based cleanup, pspf/log/local_log.py:254-266).
   *
   * Admission control: `maxRecordsPerTrigger` caps how far a trigger
   * advances (the reference's per-poll `batch_size`,
@@ -180,7 +183,8 @@ final class GraftLogMicroBatchStream(path: String,
 }
 
 case class GraftLogInputPartition(path: String, partition: Int,
-                                  startLine: Long, endLine: Long) extends InputPartition
+                                  startLine: Long, endLine: Long,
+                                  hint: Option[GraftLog.SeekHint] = None) extends InputPartition
 
 final class GraftLogReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
@@ -189,7 +193,8 @@ final class GraftLogReaderFactory extends PartitionReaderFactory {
 
 /** Executor-side reader: streams one partition's log lines in order
   * (per-key order inside a partition — docs/concurrency.md:5-11),
-  * skipping to startLine and stopping at endLine. Offsets are ABSOLUTE
+  * from startLine (a seek to the planner's hint, then a skip of the
+  * lines between it and startLine) up to endLine. Offsets are ABSOLUTE
   * (base + line index within the current log generation): a retention
   * trim grows the base but never shifts a consumer's checkpointed
   * position. A start below the base means retention passed the
@@ -201,12 +206,18 @@ final class GraftLogPartitionReader(p: GraftLogInputPartition)
   // resolve + open with retry: a concurrent trim can rename the current
   // generation between the listing and the open — re-resolve and the
   // new generation is there (the window is the rename itself)
-  private val (base, reader) = {
+  private val (base, lines) = {
     var attempt = 0
-    var out: (Long, java.io.BufferedReader) = null
+    var out: (Long, LogLines) = null
     while (out == null) {
       val (b, f) = GraftLog.currentLog(p.path, p.partition)
-      try out = (b, Files.newBufferedReader(f, StandardCharsets.UTF_8))
+      // seek to the planner's hint and skip only the residual lines
+      // (LocalLog reads from a requested offset,
+      // pspf/log/local_log.py:193-252); a hint for another generation
+      // — a trim ran since planning — is stale, so skip from byte 0
+      val mark = p.hint.filter(h => h.file == f.toString && h.base == b)
+        .fold((0L, 0L))(h => (h.line, h.pos))
+      try out = (b, GraftLog.openLines(f, math.max(0L, math.min(p.startLine, p.endLine) - b), mark))
       catch {
         case e: java.nio.file.NoSuchFileException =>
           attempt += 1
@@ -217,21 +228,17 @@ final class GraftLogPartitionReader(p: GraftLogInputPartition)
   }
   private var line = math.max(base, math.min(p.startLine, p.endLine))
   private var current: InternalRow = _
-  // skip already-committed lines (dense offsets, like LocalLog reads
-  // from a requested offset, pspf/log/local_log.py:193-252)
-  private var toSkip = line - base
-  while (toSkip > 0 && reader.readLine() != null) toSkip -= 1
 
   override def next(): Boolean = {
     while (line < p.endLine) {
-      val raw = reader.readLine()
-      if (raw == null) return false
+      if (!lines.next()) return false
       val off = line
       line += 1
       // torn-tail tombstones (sealed partial appends) parse as garbage:
       // they occupy their line/offset for stability but emit no row —
       // the LocalLog truncate-on-recovery semantics
-      val node = try mapper.readTree(raw) catch { case _: Exception => null }
+      val node = try mapper.readTree(lines.bytes, lines.lineOff, lines.lineLen)
+        catch { case _: Exception => null }
       if (node != null && node.isObject && node.hasNonNull("id") && node.hasNonNull("ts")) {
         def str(field: String): UTF8String =
           if (node.hasNonNull(field)) UTF8String.fromString(node.get(field).asText()) else null
@@ -249,5 +256,5 @@ final class GraftLogPartitionReader(p: GraftLogInputPartition)
     false
   }
   override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
+  override def close(): Unit = lines.close()
 }

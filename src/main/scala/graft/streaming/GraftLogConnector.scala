@@ -197,8 +197,11 @@ final class GraftLogConnector(root: String, numPartitions: Int = 4,
       .foreachBatch { (batch: DataFrame, _: Long) => writeBatch(batch, topic) }
       .start()
 
-  override def purgeTopic(spark: SparkSession, topic: String): Boolean =
-    Connector.deletePath(spark, path(topic))
+  override def purgeTopic(spark: SparkSession, topic: String): Boolean = {
+    val deleted = Connector.deletePath(spark, path(topic))
+    GraftLog.forget(path(topic))
+    deleted
+  }
 
   /** Consumer lag vs a checkpoint (reference XPENDING lag surface). */
   def lag(topic: String, checkpoint: String): Long =

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
 /** The graftlog DSv2 source — live broker-semantics tests (reference:
   * Valkey backend consume/ack/lag tests, tests/test_matrix.py:57-116,
@@ -305,5 +306,152 @@ class GraftLogSpec extends AnyFunSuite {
     assert(Ops.dlqCount(spark, conn, "orders") == 1)
     val dlqRow = Ops.dlqInspect(spark, conn, "orders", 5).collect().head
     assert(dlqRow.getAs[String]("value").contains("_error"))
+  }
+
+  /** The offsets a from-scratch count gives: base + '\n' bytes of each
+    * partition's current generation — independent of the scan cache. */
+  private def recount(dir: String): Map[Int, Long] = {
+    val parts = scala.util.Using.resource(Files.list(java.nio.file.Paths.get(dir))) { ls =>
+      ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("p=")).map(_.stripPrefix("p=").toInt).toList
+    }
+    parts.map { p =>
+      val (base, f) = GraftLog.currentLog(dir, p)
+      p -> (base + (if (Files.exists(f)) Files.readAllBytes(f).count(_ == '\n') else 0))
+    }.toMap
+  }
+
+  private def drainOnce(dir: String, ckpt: String, seen: ConcurrentLinkedQueue[String]): Unit =
+    spark.readStream.format("graftlog").load(dir)
+      .writeStream.option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        b.select("key").collect().foreach(r => seen.add(r.getString(0))); ()
+      }
+      .start().awaitTermination()
+
+  test("an in-flight append's unterminated tail is not a record until its newline lands") {
+    val root = Files.createTempDirectory("graftlog_inflight").toString
+    val dir = s"$root/topic"
+    val ckpt = s"$root/ckpt"
+    GraftLog.append(dir, 1, "k1", """{"n":1}""")
+    // a producer's buffered writer flushes mid-line: half a record, no newline
+    val f = java.nio.file.Paths.get(dir, "p=0", "log.jsonl")
+    val rec = """{"id":"5-0","key":"k2","value":"{\"n\":2}","ts":5}"""
+    val (head, rest) = rec.splitAt(rec.length / 2)
+    Files.write(f, head.getBytes, java.nio.file.StandardOpenOption.APPEND)
+    assert(GraftLog.latestOffsets(dir) == Map(0 -> 1L))
+    val seen = new ConcurrentLinkedQueue[String]()
+    drainOnce(dir, ckpt, seen)
+    assert(seen.toArray.toSeq == Seq("k1"))
+    drainOnce(dir, ckpt, seen)
+    assert(seen.toArray.toSeq == Seq("k1"), "the partial line must not be consumed")
+    // the append completes: the next batch reads the record exactly once
+    Files.write(f, (rest + "\n").getBytes, java.nio.file.StandardOpenOption.APPEND)
+    assert(GraftLog.latestOffsets(dir) == Map(0 -> 2L))
+    drainOnce(dir, ckpt, seen)
+    assert(seen.toArray.toSeq == Seq("k1", "k2"))
+    assert(GraftLog.lag(dir, ckpt) == 0L)
+  }
+
+  test("incremental end offsets equal a from-scratch recount across appends, seals, trims and purges") {
+    val root = Files.createTempDirectory("graftlog_count").toString
+    val dir = s"$root/topic"
+    def check(): Unit = assert(GraftLog.latestOffsets(dir) == recount(dir))
+    def fill(p: Int, n: Int, pad: Int = 8): Unit =
+      GraftLog.appendBatch(dir, p,
+        (0 until n).iterator.map(i => (s"k$i", null, s"""{"n":$i,"pad":"${"x" * pad}"}""")))
+    // interleaved appends across partitions, counted between each
+    (1 to 6).foreach { round => fill(round % 2, round * 7); check() }
+    // torn tail: excluded while torn, a tombstone line once sealed
+    val f0 = GraftLog.currentLog(dir, 0)._2
+    Files.write(f0, """{"id":"1-0","ke""".getBytes, java.nio.file.StandardOpenOption.APPEND)
+    check()
+    fill(0, 3); check()
+    // retention trim installs a new generation at a higher base
+    GraftLog.trim(dir, Map(0 -> 20L, 1 -> 5L)); check()
+    fill(0, 5); fill(1, 5); check()
+    // purge and re-create the same path, growing it past the cached end
+    val conn = new GraftLogConnector(root, numPartitions = 2)
+    val cachedEnd = Files.size(GraftLog.currentLog(dir, 1)._2)
+    assert(conn.purgeTopic(spark, "topic"))
+    assert(!GraftLog.indexedFiles.exists(_.startsWith(java.nio.file.Paths.get(dir))))
+    while (!Files.exists(GraftLog.currentLog(dir, 1)._2) ||
+      Files.size(GraftLog.currentLog(dir, 1)._2) <= cachedEnd) fill(1, 20, pad = 40)
+    check()
+    // the same, deleted behind the cache's back (another process): the
+    // changed file identity forces a recount
+    val g = GraftLog.currentLog(dir, 1)._2
+    val grown = Files.size(g)
+    Files.delete(g)
+    while (!Files.exists(g) || Files.size(g) <= grown) fill(1, 20, pad = 40)
+    check()
+    // rewritten in place (same file identity) with longer lines: only
+    // the tail check tells the new content from the old
+    val rewritten = Files.size(g)
+    Files.write(g, Array.emptyByteArray)
+    while (Files.size(g) <= rewritten) fill(1, 20, pad = 90)
+    check()
+    fill(0, 2); fill(1, 2); check()
+  }
+
+  test("a seek-hinted read returns the rows of an unhinted one: exact, below, stale and cold hints") {
+    val dir = Files.createTempDirectory("graftlog_seek").toString + "/topic"
+    // ~2.5 MB in one partition, so the index holds byte-stride marks
+    GraftLog.appendBatch(dir, 0,
+      (0 until 12000).iterator.map(i => (s"k$i", null, s"""{"n":$i,"pad":"${"y" * 180}"}""")))
+    GraftLog.latestOffsets(dir)
+    val (base, f) = GraftLog.currentLog(dir, 0)
+    val bytes = Files.readAllBytes(f)
+    val lineStart = (0L +: bytes.indices.filter(bytes(_) == '\n').map(_ + 1L)).toIndexedSeq
+    def read(start: Long, end: Long, hint: Option[GraftLog.SeekHint]): Seq[(Long, String)] = {
+      val r = new GraftLogPartitionReader(GraftLogInputPartition(dir, 0, start, end, hint))
+      try Iterator.continually(r.next()).takeWhile(identity)
+        .map(_ => (r.get().getLong(1), r.get().getUTF8String(5).toString.takeWhile(_ != ','))).toList
+      finally r.close()
+    }
+    val (s, e) = (9001L, 9051L)
+    val plain = read(s, e, None)
+    assert(plain.map(_._1) == (s until e))
+    def hint(line: Long, pos: Long) = Some(GraftLog.SeekHint(f.toString, base, line, pos))
+    // exact, and below the start (the residual lines are skipped)
+    assert(read(s, e, hint(s, lineStart(s.toInt))) == plain)
+    assert(read(s, e, hint(s - 7, lineStart(s.toInt - 7))) == plain)
+    val planned = GraftLog.seekHint(f, base, s).get
+    assert(planned.line > 0 && planned.line <= s)
+    assert(read(s, e, Some(planned)) == plain)
+    // stale: another generation, or a position not after a '\n'
+    assert(read(s, e, Some(planned.copy(base = base + 1))) == plain)
+    assert(read(s, e, Some(planned.copy(file = f.toString + ".old"))) == plain)
+    assert(read(s, e, hint(s, lineStart(s.toInt) + 3)) == plain)
+    // a cleared cache (a fresh JVM): no hint until one full count
+    GraftLog.resetIndex()
+    val cold = GraftLogScan.plan(dir, Map(0 -> s), Map(0 -> e)).head.asInstanceOf[GraftLogInputPartition]
+    assert(cold.hint.isEmpty)
+    assert(read(s, e, cold.hint) == plain)
+    GraftLog.latestOffsets(dir)
+    val warm = GraftLogScan.plan(dir, Map(0 -> s), Map(0 -> e)).head.asInstanceOf[GraftLogInputPartition]
+    assert(warm.hint.exists(_.line > 0))
+    assert(read(s, e, warm.hint) == plain)
+  }
+
+  test("retiring a generation evicts its scan cache entry; the survivor copy keeps absolute offsets") {
+    val dir = Files.createTempDirectory("graftlog_evict").toString + "/topic"
+    GraftLog.appendBatch(dir, 0, (0 until 10).iterator.map(i => (s"k$i", null, s"""{"n":$i}""")))
+    GraftLog.latestOffsets(dir)
+    val gen0 = GraftLog.currentLog(dir, 0)._2
+    assert(GraftLog.indexedFiles.contains(gen0))
+    GraftLog.trim(dir, Map(0 -> 4L))
+    assert(!GraftLog.indexedFiles.contains(gen0))
+    val gen4 = GraftLog.currentLog(dir, 0)._2
+    assert(gen4.getFileName.toString == "log-4.jsonl")
+    assert(GraftLog.latestOffsets(dir) == Map(0 -> 10L))
+    GraftLog.trim(dir, Map(0 -> 7L))
+    assert(!GraftLog.indexedFiles.contains(gen4))
+    assert(GraftLog.indexedFiles.count(_.startsWith(java.nio.file.Paths.get(dir))) <= 1)
+    val rows = spark.read.format("graftlog").load(dir).collect()
+    assert(rows.map(_.getAs[Long]("offset")).sorted.toSeq == Seq(7L, 8L, 9L))
+    assert(rows.map(_.getAs[String]("value")).sorted.toSeq ==
+      Seq("""{"n":7}""", """{"n":8}""", """{"n":9}"""))
   }
 }
