@@ -67,23 +67,20 @@ object GraftSession {
     math.max(1L, math.min(
       (bytes + targetBytes - 1) / targetBytes, maxPartitions.toLong)).toInt
 
-  /** `streamPartitions` from a frame's optimizer size estimate (for
-    * file relations: the file byte sum — exactly the drop size the
-    * streaming source will read). */
-  def streamPartitionsFor(df: org.apache.spark.sql.DataFrame): Int =
-    streamPartitions(
-      df.queryExecution.optimizedPlan.stats.sizeInBytes
-        .min(BigInt(Long.MaxValue)).toLong)
-
-  /** Run `body` with `spark.sql.shuffle.partitions` set to `n`,
-    * restoring the previous value after — the scoped form every
-    * streaming query site uses so the scale-adaptive count never leaks
-    * into the batch plans around it (those have AQE coalescing and the
-    * session default). */
-  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
+  /** Run `body` — a streaming query's start and drain — with
+    * `spark.sql.shuffle.partitions` set to `streamPartitions` of
+    * `sizeOf`'s optimizer size estimate (for file relations: the file
+    * byte sum, exactly the drop size the streaming source will read),
+    * restoring the previous value after, so the scale-adaptive count
+    * never leaks into the batch plans around it (those have AQE
+    * coalescing and the session default). */
+  def withStreamPartitions[T](s: SparkSession, sizeOf: org.apache.spark.sql.DataFrame)(
+      body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
+    s.conf.set(key, streamPartitions(
+      sizeOf.queryExecution.optimizedPlan.stats.sizeInBytes
+        .min(BigInt(Long.MaxValue)).toLong).toString)
     try body finally s.conf.set(key, prev)
   }
 

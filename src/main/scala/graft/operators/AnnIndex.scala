@@ -287,6 +287,22 @@ object AnnIndex {
       .write.mode("overwrite").parquet(ingestDir(dir, "lists", ingestTag))
     }
 
+  /** Fold-eligible `batch_<k>` ingests: k < `upToBatch`, committed in
+    * BOTH artifacts — the one definition shared by the compaction
+    * itself and the fragmentation probe, so the probe can never
+    * disagree with what a fold would actually touch. Fails fast on a
+    * torn compaction (via `committedTags`), same as serving. */
+  private def foldableBatches(spark: SparkSession, dir: String,
+                              upToBatch: Long): Seq[Long] =
+    Artifacts.map { artifact =>
+      committedTags(spark, dir, artifact).flatMap { t =>
+        t match {
+          case BatchTagRe(k) if k.toLong < upToBatch => Some(k.toLong)
+          case _ => None
+        }
+      }
+    }.reduce(_ intersect _).toSeq.sorted
+
   /** Compact the per-ingest partitions: fold every COMMITTED
     * `ingest=batch_<k>` partition of codes and lists with k <
     * `upToBatch` into one partition named for the highest folded id.
@@ -317,22 +333,6 @@ object AnnIndex {
     * the new layout, never to codes and lists folded inconsistently.
     * Returns the number of partitions folded per artifact (0 = nothing
     * to do). */
-  /** Fold-eligible `batch_<k>` ingests: k < `upToBatch`, committed in
-    * BOTH artifacts — the one definition shared by the compaction
-    * itself and the fragmentation probe, so the probe can never
-    * disagree with what a fold would actually touch. Fails fast on a
-    * torn compaction (via `committedTags`), same as serving. */
-  private def foldableBatches(spark: SparkSession, dir: String,
-                              upToBatch: Long): Seq[Long] =
-    Artifacts.map { artifact =>
-      committedTags(spark, dir, artifact).flatMap { t =>
-        t match {
-          case BatchTagRe(k) if k.toLong < upToBatch => Some(k.toLong)
-          case _ => None
-        }
-      }
-    }.reduce(_ intersect _).toSeq.sorted
-
   def compactIngests(spark: SparkSession, dir: String, upToBatch: Long): Int =
     StoreLease.withLease(spark, dir, "compactIngests") { lease =>
     val fs = fsOf(spark, dir)
@@ -352,7 +352,7 @@ object AnnIndex {
     // manifests LAST: their presence is what marks the stages complete
     // and arms the swap, and their content is what recovery deletes
     Artifacts.foreach { artifact =>
-      writeManifest(fs,
+      FoldManifest.write(fs,
         new org.apache.hadoop.fs.Path(s"$dir/$artifact/$TmpPrefix$target"),
         foldable)
     }
@@ -373,19 +373,6 @@ object AnnIndex {
     foldable.size
     }
     }
-
-  // Coverage-manifest protocol shared with the incremental-dedup band
-  // store — format, atomicity, and truncation discipline documented on
-  // graft.operators.FoldManifest.
-  private def manifestPath(sp: org.apache.hadoop.fs.Path) = FoldManifest.path(sp)
-
-  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-                            sp: org.apache.hadoop.fs.Path,
-                            tags: Seq[Long]): Unit = FoldManifest.write(fs, sp, tags)
-
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-                           sp: org.apache.hadoop.fs.Path): Option[Set[Long]] =
-    FoldManifest.read(fs, sp)
 
   /** Finish or discard an interrupted compaction. Swaps begin only
     * after every artifact's stage carries both _SUCCESS and its
@@ -413,7 +400,7 @@ object AnnIndex {
     val manifests: Map[org.apache.hadoop.fs.Path, Option[Set[Long]]] =
       stages.map { case (_, sp) =>
         sp -> (if (fs.exists(new org.apache.hadoop.fs.Path(s"$sp/_SUCCESS")) &&
-            fs.exists(manifestPath(sp))) readManifest(fs, sp)
+            fs.exists(FoldManifest.path(sp))) FoldManifest.read(fs, sp)
           else None)
       }.toMap
     val torn = stages.filterNot { case (_, sp) => manifests(sp).nonEmpty }
@@ -473,6 +460,23 @@ object AnnIndex {
     }
   }
 
+  /** Complete or discard a standing compaction stage under the store
+    * lease — the heal step of the `graft.streaming.StoreLoop` contract,
+    * shared by the ingest loop and `compactIfFragmented`. A clean index
+    * stays listing-only and lease-free. The lease is released before a
+    * fold re-acquires it (the lease is not reentrant); both windows are
+    * independently guarded. */
+  private def healStage(spark: SparkSession, dir: String, owner: String): Unit = {
+    val fs = fsOf(spark, dir)
+    val stands = Artifacts.exists { artifact =>
+      val p = new org.apache.hadoop.fs.Path(s"$dir/$artifact")
+      fs.exists(p) && fs.listStatus(p).exists(s =>
+        s.isDirectory && s.getPath.getName.startsWith(TmpPrefix))
+    }
+    if (stands)
+      StoreLease.withLease(spark, dir, owner)(_ => recoverPendingCompaction(fs, dir))
+  }
+
   /** `committedTags` minus the pending-stage fail-fast — for use INSIDE
     * recovery, which is the one reader allowed to look at the layout
     * while stages exist. `committedTags` delegates here so the
@@ -508,35 +512,22 @@ object AnnIndex {
     * `batch_<batchId>` ingest tag, so the checkpoint's replay of a
     * crashed batch overwrites exactly its own partitions (idempotent
     * end to end; the quantizers stay the base build's — retrain per
-    * cycle, not per drop). Serve any time from `load(dir)`. */
+    * cycle, not per drop). Serve any time from `load(dir)`.
+    * `compactEvery` > 0 folds the `batch_*` ingests in-loop
+    * (`compactIngests`) after healing a crashed fold's stage under the
+    * store lease — the `graft.streaming.StoreLoop` contract. */
   def runIngest(source: DataFrame, dir: String, id: String, vec: String,
                 dim: Int, m: Int, checkpointDir: String,
                 trigger: org.apache.spark.sql.streaming.Trigger =
                   org.apache.spark.sql.streaming.Trigger.AvailableNow(),
                 compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    source.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // self-heal FIRST: a crash inside a previous turn's fold leaves
-        // a stage every index read fails fast on — including this
-        // replayed batch's own appendVectors→load. The loop is the
-        // single writer, so completing/discarding it here is safe;
-        // without it a mid-compaction crash would wedge the stream
-        // behind exactly the out-of-band intervention in-loop
-        // compaction exists to remove.
-        if (compactEvery > 0)
-          recoverPendingCompaction(fsOf(batch.sparkSession, dir), dir)
+    graft.streaming.StoreLoop.start(source, checkpointDir, trigger, compactEvery,
+      heal = healStage(_, dir, "ann-loop.recover"),
+      fold = (spark, batchId) => compactIngests(spark, dir, upToBatch = batchId): Unit) {
+      (batch, batchId) =>
         appendVectors(batch.sparkSession, dir, batch, id, vec, dim, m,
           ingestTag = s"batch_$batchId")
-        // in-loop small-file control, mirroring IncrementalDedup.run:
-        // fold strictly-below-this-batch partitions (the replayable
-        // batch stays out), no-op on replay, sequential with the
-        // appender by foreachBatch's contract
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactIngests(batch.sparkSession, dir, upToBatch = batchId): Unit
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    }
 
   /** The RETRAIN TRIGGER for the fixed-quantizer append cycle: per
     * ingest, how well do the index's PERSISTED quantizers still fit
@@ -687,25 +678,7 @@ object AnnIndex {
                           upToBatch: Long): CompactionDecision = {
     require(maxIngests >= 1,
       s"maxIngests must be at least 1, got $maxIngests")
-    // Cron-safety vs our own prior crash: a fold that died mid-stage
-    // leaves a pending stage that trips the probe's committedTags
-    // fail-fast — and the fold's own recovery never runs because the
-    // probe fails BEFORE deciding to fold. Heal first, so the verb
-    // survives its own crashes. Recovery is destructive (discard or
-    // complete a staged swap), so it runs under the store lease; the
-    // common clean-store case stays listing-only and lease-free. The
-    // lease is released before compactIngests re-acquires it (the
-    // lease is not reentrant) — both windows are independently guarded.
-    val fs = fsOf(spark, dir)
-    val hasStage = Artifacts.exists { artifact =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$artifact")
-      fs.exists(p) && fs.listStatus(p).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith(TmpPrefix))
-    }
-    if (hasStage)
-      StoreLease.withLease(spark, dir, "compactIfFragmented.recover") { _ =>
-        recoverPendingCompaction(fs, dir)
-      }
+    healStage(spark, dir, "compactIfFragmented.recover")
     val standing = foldableBatches(spark, dir, upToBatch).size
     val fire = standing > maxIngests
     val folded = if (fire) compactIngests(spark, dir, upToBatch) else 0

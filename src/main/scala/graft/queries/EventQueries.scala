@@ -68,9 +68,8 @@ object EventQueries {
       // RocksDB instance opens/commits per partition per micro-batch
       // (see GraftSession.streamPartitions) — fixed cost the data has
       // to be big enough to amortize
-      val nParts = graft.GraftSession.streamPartitionsFor(
-        s.read.parquet(s"$dir/events.parquet"))
-      val q = graft.GraftSession.withShufflePartitions(s, nParts) {
+      val q = graft.GraftSession.withStreamPartitions(s,
+          s.read.parquet(s"$dir/events.parquet")) {
         build(src).writeStream.outputMode(outputMode)
           .option("checkpointLocation", ckpt)
           .format("memory").queryName(sink)
@@ -468,21 +467,14 @@ object EventQueries {
         val drop = (col("event_id") * 4 / lit(mx + 1)).cast(LongType)
         var emitted = 0L
         var written = 0L
-        // two starts, not four (the w15 shape): drops 0-2 land as
-        // single pinned-mtime files and one AvailableNow run at
-        // maxFilesPerTrigger=1 drains them as micro-batches 0-2; drop
-        // 3 lands after that run exits, so the second start is a
-        // genuine checkpoint resume — per-drop suppression semantics
-        // unchanged (batch k still IS drop k, enforced below)
-        // state partitions from the drop size, not the core count (the
-        // runTws rationale; the checkpoint pins the first start's value
-        // so both drains must derive it from the same input)
-        val nParts = graft.GraftSession.streamPartitionsFor(ev)
-        def drain(): Unit = graft.GraftSession.withShufflePartitions(s, nParts) {
-          val typed = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$root/src")
-            .as[(Long, Long, String)]
-          val q = graft.streaming.KeyedState.cdcWriteSetTws(typed)
+        // two starts, not four (the w15 shape, LlmQueries.runDrops):
+        // per-drop suppression semantics unchanged (batch k still IS
+        // drop k, enforced by the harness); state partitions come from
+        // the drop size, not the core count (the runTws rationale; the
+        // checkpoint pins the first start's value, and both starts
+        // derive it from the same input)
+        graft.queries.LlmQueries.runDrops(s, ev, root, k => ev.filter(drop === k)) { src =>
+          graft.streaming.KeyedState.cdcWriteSetTws(src.as[(Long, Long, String)])
             .toDF("user_id", "written_type", "changed")
             .writeStream.outputMode("update")
             .option("checkpointLocation", s"$root/ckpt")
@@ -498,15 +490,7 @@ object EventQueries {
             }
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
-          q.awaitTermination()
         }
-        (0 until 3).foreach(k =>
-          graft.queries.LlmQueries.landDrop(ev.filter(drop === k), s"$root/src", k))
-        drain()
-        graft.queries.LlmQueries.requireDropBatches(s"$root/out", 3)
-        graft.queries.LlmQueries.landDrop(ev.filter(drop === 3), s"$root/src", 3)
-        drain()
-        graft.queries.LlmQueries.requireDropBatches(s"$root/out", 4)
         require(written < emitted,
           s"suppression must be non-vacuous: wrote $written of $emitted emissions")
         val out = s.read.option("basePath", s"$root/out").parquet(s"$root/out")

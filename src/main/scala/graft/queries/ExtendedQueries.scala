@@ -718,8 +718,7 @@ object ExtendedQueries {
         // state partitions from the input size, not the core count
         // (the runTws rationale: one RocksDB instance per partition
         // per micro-batch)
-        val nParts = graft.GraftSession.streamPartitionsFor(docs)
-        val q = graft.GraftSession.withShufflePartitions(s, nParts) {
+        val q = graft.GraftSession.withStreamPartitions(s, docs) {
           folded.map { case (r, (n, sum)) => (r, n, sum) }
             .toDF("r", "n_seen", "counters")
             .writeStream.outputMode("update")

@@ -457,9 +457,9 @@ object GraftLog {
     }
   }
 
-  /** Idempotency markers (produce retry guards + writeBatchIdempotent
-    * batch guards) are only consulted within their own produce/replay
-    * window; retention sweeps ones older than this so `_markers/` stays
+  /** Idempotency markers (produce's per-partition guards, keyed by a
+    * fresh token or by writeBatchIdempotent's (writer, batch)) are only
+    * consulted within their own produce/replay window; retention sweeps ones older than this so `_markers/` stays
     * bounded, piggybacking on trim like the log cleanup itself. */
   private[sources] val markerRetentionMs: Long = 7L * 24 * 3600 * 1000
 

@@ -40,7 +40,11 @@ final class GraftLogConnector(root: String, numPartitions: Int = 4,
     *  - arbitrary frames: JSON-wrapped wholesale into `value` with the
     *    key from `keyCol`/`key` when present (the reference
     *    JSON-stringifies complex payloads the same way, valkey.py:281-293). */
-  override def writeBatch(df: DataFrame, topic: String): Unit = {
+  override def writeBatch(df: DataFrame, topic: String): Unit =
+    writeBatch(df, topic, java.util.UUID.randomUUID().toString)
+
+  /** `writeBatch` whose produce markers carry `token`. */
+  private def writeBatch(df: DataFrame, topic: String, token: String): Unit = {
     val cols = df.columns.toSet
     val env = GraftLog.schema.fieldNames.toSet
     val valueIsString = cols.contains("value") &&
@@ -56,7 +60,7 @@ final class GraftLogConnector(root: String, numPartitions: Int = 4,
       (if (cols.contains("key")) col("key")
        else org.apache.spark.sql.functions.lit(null)).cast("string").as("key")
     if (valueIsString && extra.isEmpty) {
-      produce(df.select(keyCol0, evtCol, col("value")), topic)
+      produce(df.select(keyCol0, evtCol, col("value")), topic, token)
     } else if (valueIsString && extra.forall(_.startsWith("_"))) {
       val sel = df.select(Seq(keyCol0, evtCol, col("value")) ++
         extra.map(c => col(c).cast("string").as(c)): _*)
@@ -79,13 +83,13 @@ final class GraftLogConnector(root: String, numPartitions: Int = 4,
           org.apache.spark.sql.Row(r.getString(0), r.getString(1), mapper.writeValueAsString(obj))
         }
       }(org.apache.spark.sql.Encoders.row(outSchema))
-      produce(folded.toDF("key", "event_type", "value"), topic)
+      produce(folded.toDF("key", "event_type", "value"), topic, token)
     } else {
       val key = if (cols.contains(keyCol)) col(keyCol).cast("string")
         else if (cols.contains("key")) col("key").cast("string")
         else org.apache.spark.sql.functions.lit("default_key") // reference fallback key (pspf/stream.py:400)
       produce(df.select(key.as("key"), evtCol,
-        to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("value")), topic)
+        to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("value")), topic, token)
     }
   }
 
@@ -98,18 +102,18 @@ final class GraftLogConnector(root: String, numPartitions: Int = 4,
     *     sorted back into source order (spill-safe, never in-heap);
     *  3. each task appends its whole slice under the partition's
     *     cross-process lock in ONE locked batch (GraftLog.appendBatch),
-    *     guarded by a per-(produce, partition) marker checked/created
+    *     guarded by a per-(`token`, partition) marker checked/created
     *     inside the same lock — a Spark task RETRY or speculative twin
-    *     whose predecessor completed skips the append instead of
-    *     duplicating the slice. (A crash mid-append still duplicates
-    *     the torn prefix on retry: the writeBatchIdempotent window.)
+    *     whose predecessor completed, or a replayed batch of
+    *     `writeBatchIdempotent` (whose token is its (writer, batch)),
+    *     skips the append instead of duplicating the slice. (A crash
+    *     mid-append still duplicates the torn prefix on retry.)
     * One writer per partition preserves per-key order (same key → same
     * partition → same task, sorted) and dense offsets, with produce
     * bandwidth scaling with partitions instead of driver memory. */
-  private def produce(sel: DataFrame, topic: String): Unit = {
+  private def produce(sel: DataFrame, topic: String, token: String): Unit = {
     val dir = path(topic)
     val np = numPartitions
-    val token = java.util.UUID.randomUUID().toString
     val tagged = sel
       .select(col(sel.columns(0)).cast("string").as("key"),
         col(sel.columns(1)).cast("string").as("event_type"),
@@ -169,25 +173,20 @@ final class GraftLogConnector(root: String, numPartitions: Int = 4,
     }
   }
 
-  /** Batch-replay-safe append via a completion marker per
-    * (writerId, batchId): the common engine-replay case — crash AFTER
-    * the side write but before the micro-batch commit — finds the
-    * marker and skips, leaving one copy. A crash DURING the append
-    * itself can still duplicate the torn prefix on retry (at-least-once
-    * in that narrow window) — the same contract as any broker without
-    * transactions; GraftLog's torn-tail sealing keeps the log readable
-    * through it. Markers live under `_markers/` inside the topic dir,
-    * invisible to readers (they only scan `p=*`). */
+  /** Batch-replay-safe append: the produce's per-partition markers
+    * are keyed by (writerId, batchId) instead of a fresh token, so the
+    * common engine-replay case — a crash after some or all of the
+    * partition appends but before the micro-batch commit — finds each
+    * appended partition's marker and skips it, leaving one copy. A
+    * crash DURING one partition's append can still duplicate its torn
+    * prefix on retry (at-least-once in that narrow window) — the same
+    * contract as any broker without transactions; GraftLog's torn-tail
+    * sealing keeps the log readable through it. Markers live under
+    * `_markers/` inside the topic dir, invisible to readers (they only
+    * scan `p=*`). */
   override def writeBatchIdempotent(df: DataFrame, topic: String, batchId: Long,
-                                    writerId: String): Unit = {
-    val safe = writerId.replaceAll("[^A-Za-z0-9_-]", "_")
-    val marker = java.nio.file.Paths.get(path(topic), "_markers", s"$safe-$batchId")
-    if (!java.nio.file.Files.exists(marker)) {
-      writeBatch(df, topic)
-      java.nio.file.Files.createDirectories(marker.getParent)
-      java.nio.file.Files.write(marker, Array.emptyByteArray)
-    }
-  }
+                                    writerId: String): Unit =
+    writeBatch(df, topic, s"${writerId.replaceAll("[^A-Za-z0-9_-]", "_")}-$batchId")
 
   override def writeStream(df: DataFrame, topic: String, checkpoint: String,
                            outputMode: String): StreamingQuery =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -43,8 +43,9 @@ object IncrementalDedup {
     * lives in some shared bucket), join output bounded by the new
     * side's band rows, per-drop cost flat in group size — and
     * surfaces `n_matches` as NULL: the distinct-matches count IS the
-    * pair set, so a pipeline that drops it stops paying for it. */
-  /** `shingler`, when set, replaces the default word-n-gram pass with
+    * pair set, so a pipeline that drops it stops paying for it.
+    *
+    * `shingler`, when set, replaces the default word-n-gram pass with
     * any (id, s) shingle-frame builder over the batch — the byte
     * families plug in here (`Dedup.byteShingleSet` over a BINARY
     * payload column, the l110 loop), and the store/checkpoint/verdict
@@ -60,40 +61,62 @@ object IncrementalDedup {
 
   private def batchDir(root: String, batchId: Long) = s"$root/ingest_batch=$batchId"
 
+  private def fsOf(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** THE partition listing every store reader shares (`seenBands`,
+    * `storedCandidatePairs`, `results` and the fold's
+    * `foldableBandPartitions`): the `ingest_batch=<id>` partitions of
+    * `dir` as id-sorted (id, path) pairs — only `_SUCCESS`-committed ones
+    * when `committedOnly` — or None when `dir` does not exist. ONE
+    * listing serves the stage check and the filter: object-store
+    * listings at scale are not free, and the two views never need to
+    * disagree.
+    *
+    * Fails fast on a standing compaction stage. A compaction interrupted
+    * between its delete and rename leaves history ONLY in the staged
+    * dot-dir; reading past it would dedup against a hole and write
+    * permanently wrong verdicts. Readers fail instead of repairing
+    * (repair here would make every reader a writer and race a
+    * still-running compactor over the same renames); the loop's heal,
+    * `compactBandStore` or `Ctl bands-resolve` complete or discard it. */
+  private def partitions(fs: FileSystem, dir: String,
+                         committedOnly: Boolean): Option[Seq[(Long, Path)]] =
+    if (!fs.exists(new Path(dir))) None
+    else {
+      val ls = fs.listStatus(new Path(dir)).toSeq.filter(_.isDirectory).map(_.getPath)
+      val pending = ls.filter(d => isStageName(d.getName))
+      require(pending.isEmpty,
+        s"store $dir has an unfinished compaction (${pending.map(_.getName).mkString(", ")}) " +
+          "— run compactBandStore (or Ctl bands-resolve) to complete the swap first")
+      Some(ls.flatMap(d => d.getName match {
+        case BatchDirRe(b) if !committedOnly || fs.exists(new Path(d, "_SUCCESS")) =>
+          Some((b.toLong, d))
+        case _ => None
+      }).sortBy(_._1))
+    }
+
+  private def readPartitions(spark: SparkSession, dir: String,
+                             parts: Seq[(Long, Path)]): DataFrame =
+    spark.read.option("basePath", dir).parquet(parts.map(_._2.toString): _*)
+
+  /** Every `_SUCCESS`-committed partition under `dir`; fails on a missing
+    * or empty store. */
+  private def committedPartitions(spark: SparkSession, dir: String): DataFrame = {
+    val parts = partitions(fsOf(spark, dir), dir, committedOnly = true)
+      .getOrElse(throw new IllegalArgumentException(s"no store under $dir"))
+    require(parts.nonEmpty, s"no committed partitions under $dir")
+    readPartitions(spark, dir, parts)
+  }
+
   /** Band-store partitions written by micro-batches BEFORE `beforeBatch`
     * — a replayed batch must not treat its own earlier (possibly
     * partial) write as seen corpus. None when no history exists. */
   def seenBands(spark: SparkSession, bandStoreDir: String,
-                beforeBatch: Long): Option[DataFrame] = {
-    val p = new Path(bandStoreDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      // ONE listing serves both checks — object-store listings at
-      // scale are not free, and the two views never need to disagree
-      val ls = fs.listStatus(p).toSeq.filter(_.isDirectory)
-      // a compaction interrupted between its delete and rename leaves
-      // history ONLY in the staged dot-dir — reading past it would
-      // dedup against a hole and write permanently wrong verdicts.
-      // The read path FAILS FAST instead of repairing (repair here
-      // would make every reader a writer and race a still-running
-      // compactor over the same renames); re-run compactBandStore to
-      // complete the swap, then restart the ingest.
-      val pending = ls.filter(s => isStageName(s.getPath.getName))
-      require(pending.isEmpty,
-        s"band store $bandStoreDir has an unfinished compaction " +
-          s"(${pending.map(_.getPath.getName).mkString(", ")}) — " +
-          "run compactBandStore to complete the swap before ingesting")
-      val dirs = ls.map(_.getPath)
-        .filter(d => d.getName match {
-          case BatchDirRe(b) => b.toLong < beforeBatch
-          case _             => false
-        })
-      if (dirs.isEmpty) None
-      else Some(spark.read.option("basePath", bandStoreDir)
-        .parquet(dirs.map(_.toString): _*))
-    }
-  }
+                beforeBatch: Long): Option[DataFrame] =
+    partitions(fsOf(spark, bandStoreDir), bandStoreDir, committedOnly = false)
+      .map(_.filter(_._1 < beforeBatch)).filter(_.nonEmpty)
+      .map(readPartitions(spark, bandStoreDir, _))
 
   /** Candidate duplicate pairs implied by the ENTIRE accumulated band
     * store — including same-batch pairs the per-batch verdicts never
@@ -110,27 +133,8 @@ object IncrementalDedup {
     * _SUCCESS-committed partitions — missing band rows would silently
     * drop candidate pairs and mislabel groups. */
   def storedCandidatePairs(spark: SparkSession, bandStoreDir: String,
-                           id: String): DataFrame = {
-    val p = new Path(bandStoreDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p), s"no band store under $bandStoreDir")
-    val ls = fs.listStatus(p).toSeq.filter(_.isDirectory)
-    val pending = ls.filter(s => isStageName(s.getPath.getName))
-    require(pending.isEmpty,
-      s"band store $bandStoreDir has an unfinished compaction " +
-        s"(${pending.map(_.getPath.getName).mkString(", ")}) — " +
-        "run compactBandStore to complete the swap first")
-    val committed = ls
-      .filter(s => BatchDirRe.pattern.matcher(s.getPath.getName).matches() &&
-        fs.exists(new Path(s"${s.getPath}/_SUCCESS")))
-      .map(_.getPath)
-    require(committed.nonEmpty, s"no committed band partitions under $bandStoreDir")
-    Dedup.bandPairJoin(
-      spark.read.option("basePath", bandStoreDir)
-        .parquet(committed.map(_.toString): _*)
-        .drop("ingest_batch"),
-      id)
-  }
+                           id: String): DataFrame =
+    Dedup.bandPairJoin(committedPartitions(spark, bandStoreDir).drop("ingest_batch"), id)
 
   /** One turn of the ingest loop (the foreachBatch body). Writes
     * per-document dedup verdicts to `resultDir/ingest_batch=<id>` —
@@ -189,59 +193,29 @@ object IncrementalDedup {
     * strictly-before still holds), but batch ids then stop being drop
     * ids, which breaks replay-overwrite granularity expectations
     * callers may have built on "one drop = one partition" (and any
-    * oracle keyed on drop membership). */
-  /** `compactEvery` > 0 folds the band store in-loop every that many
+    * oracle keyed on drop membership).
+    *
+    * `compactEvery` > 0 folds the band store in-loop every that many
     * batches (after the batch's own append), so a long-running crawl
     * ingest manages its own small-file problem instead of deferring to
-    * an out-of-band job. The fold covers batches strictly BELOW the
-    * current id — the one partition a checkpoint replay can overwrite
-    * stays out of it — and a replayed batch re-runs its compaction as a
-    * no-op (fewer than two foldable partitions remain), so the hook is
-    * idempotent end to end. foreachBatch bodies run sequentially: the
-    * compactor never races the appender it shares the loop with
-    * (the single-writer discipline compactBandStore requires).
-    *
-    * When the loop owns compaction it must also own RECOVERY: a crash
-    * inside a previous turn's fold leaves a stage that every band-store
-    * read fails fast on — including the replayed batch's own
-    * `seenBands` — so each turn first completes or discards any pending
-    * stage, under the store's single-writer LEASE (an out-of-band
-    * compactor mid-staging makes the turn fail loudly at acquire
-    * rather than discard the compactor's live stage). Without the
-    * recovery, a mid-compaction crash would wedge the stream behind
-    * exactly the out-of-band intervention in-loop compaction exists to
-    * remove. */
+    * an out-of-band job; the loop then also heals a crashed fold's
+    * stage under the store lease first (the `StoreLoop` contract). */
   def run(source: DataFrame, cfg: Config, bandStoreDir: String,
           resultDir: String, checkpointDir: String,
           trigger: Trigger = Trigger.AvailableNow(),
           compactEvery: Int = 0): StreamingQuery =
-    source.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (compactEvery > 0) {
-          // Recovery under the store LEASE, not under the "this loop is
-          // the single writer" prose: if an out-of-band `ctl
-          // bands-compact` is mid-staging when this turn starts, the
-          // loop fails loudly at acquire instead of discarding the
-          // compactor's live stage as a "crash". The clean-store case
-          // (every turn, in steady state) stays listing-only.
-          val fs = new Path(bandStoreDir)
-            .getFileSystem(b.sparkSession.sessionState.newHadoopConf())
-          val root = new Path(bandStoreDir)
-          val hasStage = fs.exists(root) && fs.listStatus(root).exists(s =>
-            s.isDirectory && isStageName(s.getPath.getName))
-          if (hasStage)
-            graft.operators.StoreLease.withLease(b.sparkSession,
-                bandStoreDir, "ingest-loop.recover") { _ =>
-              recoverPendingCompaction(fs, bandStoreDir)
-            }
-        }
-        ingestBatch(b, id, cfg, bandStoreDir, resultDir)
-        if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
-          compactBandStore(b.sparkSession, bandStoreDir, upToBatch = id): Unit
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    bandLoop(source, bandStoreDir, checkpointDir, trigger, compactEvery, "ingest-loop")(
+      ingestBatch(_, _, cfg, bandStoreDir, resultDir))
+
+  /** `StoreLoop` over a band-layout store: heal is `healStage`, fold is
+    * `compactBandStore` (both schema-agnostic, so the fingerprint store
+    * shares them). */
+  private def bandLoop(source: DataFrame, storeDir: String, checkpointDir: String,
+                       trigger: Trigger, compactEvery: Int, owner: String)(
+      turn: (DataFrame, Long) => Unit): StreamingQuery =
+    StoreLoop.start(source, checkpointDir, trigger, compactEvery,
+      heal = healStage(_, storeDir, s"$owner.recover"),
+      fold = (spark, id) => compactBandStore(spark, storeDir, upToBatch = id): Unit)(turn)
 
   // ------------------------------------------------------------------
   // Winnow ingest loop — the exact-substring complement of the minhash
@@ -329,34 +303,15 @@ object IncrementalDedup {
     * checkpoint carries source progress), same store guards, and the
     * same in-loop compaction: `compactEvery` > 0 folds the fingerprint
     * store every that many batches (the partition fold is
-    * schema-agnostic), with the identical lease-guarded recovery of a
-    * prior turn's crashed stage — the small-files problem the band
-    * loop manages for itself would otherwise reopen verbatim here. */
+    * schema-agnostic), healing a prior turn's crashed stage under the
+    * lease first — the small-files problem the band loop manages for
+    * itself would otherwise reopen verbatim here. */
   def runWinnow(source: DataFrame, cfg: WinnowConfig, fpStoreDir: String,
                 resultDir: String, checkpointDir: String,
                 trigger: Trigger = Trigger.AvailableNow(),
                 compactEvery: Int = 0): StreamingQuery =
-    source.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (compactEvery > 0) {
-          val fs = new Path(fpStoreDir)
-            .getFileSystem(b.sparkSession.sessionState.newHadoopConf())
-          val root = new Path(fpStoreDir)
-          val hasStage = fs.exists(root) && fs.listStatus(root).exists(s =>
-            s.isDirectory && isStageName(s.getPath.getName))
-          if (hasStage)
-            graft.operators.StoreLease.withLease(b.sparkSession,
-                fpStoreDir, "winnow-loop.recover") { _ =>
-              recoverPendingCompaction(fs, fpStoreDir)
-            }
-        }
-        ingestWinnowBatch(b, id, cfg, fpStoreDir, resultDir)
-        if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
-          compactBandStore(b.sparkSession, fpStoreDir, upToBatch = id): Unit
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    bandLoop(source, fpStoreDir, checkpointDir, trigger, compactEvery, "winnow-loop")(
+      ingestWinnowBatch(_, _, cfg, fpStoreDir, resultDir))
 
   // ------------------------------------------------------------------
   // Decontamination ingest guard — the route-at-ingest form of the
@@ -434,13 +389,8 @@ object IncrementalDedup {
                        evalFpDir: String, resultDir: String, leakDir: String,
                        checkpointDir: String,
                        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    source.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        ingestDecontaminateBatch(b, id, cfg, evalFpDir, resultDir, leakDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    StoreLoop.start(source, checkpointDir, trigger)(
+      ingestDecontaminateBatch(_, _, cfg, evalFpDir, resultDir, leakDir))
 
   /** All per-document verdicts written so far, with their
     * `ingest_batch` partition column. Reads only partitions whose
@@ -448,18 +398,68 @@ object IncrementalDedup {
     * partition stays invisible until its checkpoint replay overwrites
     * it — the same guard the band-store read path gets from its strict
     * batch-id filter. */
-  def results(spark: SparkSession, resultDir: String): DataFrame = {
-    val p = new Path(resultDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p), s"no results under $resultDir")
-    val committed = fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory &&
-        BatchDirRe.pattern.matcher(s.getPath.getName).matches() &&
-        fs.exists(new Path(s"${s.getPath}/_SUCCESS")))
-      .map(_.getPath)
-    require(committed.nonEmpty, s"no committed result partitions under $resultDir")
-    spark.read.option("basePath", resultDir)
-      .parquet(committed.map(_.toString): _*)
+  def results(spark: SparkSession, resultDir: String): DataFrame =
+    committedPartitions(spark, resultDir)
+
+  /** Fold-eligible band partitions: committed (`_SUCCESS`) and
+    * strictly below `upToBatch` — the one definition shared by the
+    * fold and the fragmentation probe, so they can never disagree.
+    * Fails fast on a standing compaction stage, like every reader. */
+  private def foldableBandPartitions(fs: FileSystem, bandStoreDir: String,
+                                     upToBatch: Long): Seq[(Long, Path)] =
+    partitions(fs, bandStoreDir, committedOnly = true).getOrElse(Nil)
+      .filter(_._1 < upToBatch)
+
+  /** Complete or discard a standing compaction stage under the store
+    * lease — the heal step of the `StoreLoop` contract, shared by the
+    * band and fingerprint loops and by `compactBandStoreIfFragmented`.
+    * A clean store stays listing-only and lease-free. */
+  private def healStage(spark: SparkSession, storeDir: String, owner: String): Unit = {
+    val fs = fsOf(spark, storeDir)
+    val root = new Path(storeDir)
+    if (fs.exists(root) && fs.listStatus(root).exists(s =>
+        s.isDirectory && isStageName(s.getPath.getName)))
+      graft.operators.StoreLease.withLease(spark, storeDir, owner) { _ =>
+        recoverPendingCompaction(fs, storeDir)
+      }
+  }
+
+  /** The band-store fragmentation decision — the dedup-crawl twin of
+    * `AnnIndex.CompactionDecision`, probe result traveling with the
+    * outcome so callers and specs assert the decision, never guess. */
+  final case class BandCompactionDecision(standingPartitions: Long,
+                                          maxPartitions: Long,
+                                          compacted: Boolean, folded: Int)
+
+  /** Close the band-store small-files loop the way
+    * `AnnIndex.compactIfFragmented` closes the ANN one: MEASURE the
+    * standing committed fold-eligible partition count and fold only
+    * past `maxPartitions` — the cron-safe out-of-band form for crawl
+    * loops that don't own compaction via `compactEvery` (whose fixed
+    * cadence remains the right in-loop policy: there the loop IS the
+    * single writer and the fold cost amortizes by construction). The
+    * probe is file-listing only; the fold takes the store lease and
+    * carries the staged-swap crash discipline.
+    *
+    * Cron-safety vs our own prior crash: a fold that died mid-stage
+    * trips the probe's stage fail-fast before the fold's own recovery
+    * would run, wedging this verb permanently — so it heals first
+    * (`healStage`). One irreducible manual case remains: a LEGACY
+    * (pre-manifest) stage with _SUCCESS but no `_FOLDED` manifest is
+    * ambiguous — recovery fails fast naming `ctl bands-resolve`, by
+    * design (the stage may be the only copy of folded history). */
+  def compactBandStoreIfFragmented(spark: SparkSession, bandStoreDir: String,
+                                   maxPartitions: Int, upToBatch: Long)
+      : BandCompactionDecision = {
+    require(maxPartitions >= 1,
+      s"maxPartitions must be at least 1, got $maxPartitions")
+    healStage(spark, bandStoreDir, "compactBandStoreIfFragmented.recover")
+    val standing = foldableBandPartitions(fsOf(spark, bandStoreDir), bandStoreDir,
+      upToBatch).size
+    val fire = standing > maxPartitions
+    val folded =
+      if (fire) compactBandStore(spark, bandStoreDir, upToBatch) else 0
+    BandCompactionDecision(standing, maxPartitions, fire, folded)
   }
 
   /** Compact the band store: fold every partition with id <
@@ -478,84 +478,10 @@ object IncrementalDedup {
     * own just-written partition is excluded by the strict <) or
     * out-of-band with no knowledge of the checkpoint's commit state.
     * Returns the number of partitions folded (0 = nothing to do). */
-  /** Fold-eligible band partitions: committed (`_SUCCESS`) and
-    * strictly below `upToBatch` — the one definition shared by the
-    * fold and the fragmentation probe, so they can never disagree.
-    * Fails fast on a standing compaction stage (part of the history
-    * may live only there — same discipline as `seenBands`); complete
-    * or discard it via `compactBandStore` / `Ctl bands-resolve`. */
-  private def foldableBandPartitions(fs: org.apache.hadoop.fs.FileSystem,
-                                     bandStoreDir: String,
-                                     upToBatch: Long): Seq[Long] = {
-    val p = new Path(bandStoreDir)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val ls = fs.listStatus(p).toSeq.filter(_.isDirectory)
-      val pending = ls.filter(s => isStageName(s.getPath.getName))
-      require(pending.isEmpty,
-        s"$bandStoreDir has an unfinished compaction " +
-          s"(${pending.map(_.getPath.getName).mkString(", ")}) — " +
-          "run compactBandStore (or Ctl bands-resolve) before probing")
-      ls.map(_.getPath).flatMap(d => d.getName match {
-        case BatchDirRe(b) if b.toLong < upToBatch &&
-          fs.exists(new Path(s"$d/_SUCCESS")) => Some(b.toLong)
-        case _ => None
-      }).sorted
-    }
-  }
-
-  /** The band-store fragmentation decision — the dedup-crawl twin of
-    * `AnnIndex.CompactionDecision`, probe result traveling with the
-    * outcome so callers and specs assert the decision, never guess. */
-  final case class BandCompactionDecision(standingPartitions: Long,
-                                          maxPartitions: Long,
-                                          compacted: Boolean, folded: Int)
-
-  /** Close the band-store small-files loop the way
-    * `AnnIndex.compactIfFragmented` closes the ANN one: MEASURE the
-    * standing committed fold-eligible partition count and fold only
-    * past `maxPartitions` — the cron-safe out-of-band form for crawl
-    * loops that don't own compaction via `compactEvery` (whose fixed
-    * cadence remains the right in-loop policy: there the loop IS the
-    * single writer and the fold cost amortizes by construction). The
-    * probe is file-listing only; the fold takes the store lease and
-    * carries the staged-swap crash discipline. */
-  def compactBandStoreIfFragmented(spark: SparkSession, bandStoreDir: String,
-                                   maxPartitions: Int, upToBatch: Long)
-      : BandCompactionDecision = {
-    require(maxPartitions >= 1,
-      s"maxPartitions must be at least 1, got $maxPartitions")
-    val fs = new Path(bandStoreDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // Cron-safety vs our own prior crash: a fold that died mid-stage
-    // trips foldableBandPartitions' fail-fast before the fold's own
-    // recovery would run, wedging this verb permanently. Heal first,
-    // under the lease (recovery discards or completes a staged swap);
-    // the clean-store case stays listing-only and lease-free. One
-    // irreducible manual case remains: a LEGACY (pre-manifest) stage
-    // with _SUCCESS but no `_FOLDED` manifest is ambiguous — recovery
-    // fails fast naming `ctl bands-resolve`, by design (the stage may
-    // be the only copy of folded history).
-    val root = new Path(bandStoreDir)
-    val hasStage = fs.exists(root) && fs.listStatus(root).exists(s =>
-      s.isDirectory && isStageName(s.getPath.getName))
-    if (hasStage)
-      graft.operators.StoreLease.withLease(spark, bandStoreDir,
-          "compactBandStoreIfFragmented.recover") { _ =>
-        recoverPendingCompaction(fs, bandStoreDir)
-      }
-    val standing = foldableBandPartitions(fs, bandStoreDir, upToBatch).size
-    val fire = standing > maxPartitions
-    val folded =
-      if (fire) compactBandStore(spark, bandStoreDir, upToBatch) else 0
-    BandCompactionDecision(standing, maxPartitions, fire, folded)
-  }
-
   def compactBandStore(spark: SparkSession, bandStoreDir: String,
                        upToBatch: Long): Int = {
-    val p = new Path(bandStoreDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return 0
+    val fs = fsOf(spark, bandStoreDir)
+    if (!fs.exists(new Path(bandStoreDir))) return 0
     // enforced single-writer: an out-of-band `ctl bands-compact` racing
     // the loop's own in-band hook fails at acquire instead of
     // interleaving deletes with the other's staged swap
@@ -564,7 +490,6 @@ object IncrementalDedup {
     recoverPendingCompaction(fs, bandStoreDir)
     // recovery just ran, so the shared lister's stage fail-fast passes
     val olds = foldableBandPartitions(fs, bandStoreDir, upToBatch)
-      .map(b => (b, new Path(batchDir(bandStoreDir, b))))
     if (olds.size < 2) 0 else {
     val target = olds.map(_._1).max
     val merged = spark.read

@@ -308,6 +308,21 @@ class GraftLogSpec extends AnyFunSuite {
     assert(dlqRow.getAs[String]("value").contains("_error"))
   }
 
+  test("writeBatchIdempotent: replaying a batch whose produce completed appends nothing") {
+    val root = Files.createTempDirectory("graftlog_idem").toString
+    val conn = new GraftLogConnector(root, numPartitions = 2, keyCol = "event_id")
+    val leg = Seq(("e1", "a"), ("e2", "b"), ("e3", "c")).toDF("event_id", "status")
+    conn.writeBatchIdempotent(leg, "orders", batchId = 7, writerId = "w/1")
+    // the driver crashed after the produce job but before any batch-level
+    // completion marker landed: there is none for the replay to find
+    Files.deleteIfExists(java.nio.file.Paths.get(root, "orders", "_markers", "w_1-7"))
+    conn.writeBatchIdempotent(leg, "orders", batchId = 7, writerId = "w/1")
+    assert(conn.readBatch(spark, "orders").count() == 3)
+    // the writer's next batch still appends
+    conn.writeBatchIdempotent(leg, "orders", batchId = 8, writerId = "w/1")
+    assert(conn.readBatch(spark, "orders").count() == 6)
+  }
+
   /** The offsets a from-scratch count gives: base + '\n' bytes of each
     * partition's current generation — independent of the scan cache. */
   private def recount(dir: String): Map[Int, Long] = {

@@ -422,37 +422,80 @@ class IncrementalDedupStreamSpec extends AnyFunSuite {
     assert(fire.compacted && fire.folded == 2 && !Files.exists(torn))
   }
 
-  test("the crawl loop's recovery refuses to discard a live out-of-band compactor's stage") {
-    val root = Files.createTempDirectory("graft_incr_leaseloop").toString
-    val src = s"$root/src"; val bands = s"$root/bands"
-    val out = s"$root/out"; val ckpt = s"$root/ckpt"
-    val schema = Seq((0L, "")).toDF("doc_id", "text").schema
-    def drop(rows: (Long, String)*): Unit =
-      rows.toDF("doc_id", "text").write.mode("append").parquet(src)
-    def runOnce(): Unit =
-      IncrementalDedup.run(spark.readStream.schema(schema).parquet(src),
-        cfg, bands, out, ckpt, compactEvery = 4).awaitTermination()
-    drop(1L -> "the quick brown fox jumps over the lazy dog every single day")
-    runOnce()
-    // an out-of-band compactor is MID-STAGING: its stage dir stands and
-    // it holds the store lease. The loop's old unleased recovery would
-    // have discarded the live stage as a "crash"; now the turn fails
-    // loudly at acquire, naming the holder.
-    Files.createDirectory(Paths.get(s"$bands/.compact_tmp2_0"))
-    val h = graft.operators.StoreLease.acquire(spark, bands, "oob-compactor")
-    drop(2L -> "completely unrelated words describing some other topic entirely here")
-    val e = intercept[Exception](runOnce())
-    def chain(t: Throwable): Seq[String] =
-      if (t == null) Nil else t.getMessage +: chain(t.getCause)
-    assert(chain(e).filter(_ != null).exists(m =>
-      m.contains("oob-compactor") && m.contains("under maintenance")),
-      s"expected a loud lease refusal, got: ${chain(e)}")
-    // compactor done: lease released, stage (unarmed) left to recovery —
-    // the replayed turn heals it under its own lease and proceeds
-    graft.operators.StoreLease.release(spark, h)
-    runOnce()
-    assert(!Files.exists(Paths.get(s"$bands/.compact_tmp2_0")))
-    assert(IncrementalDedup.results(spark, out).count() == 2)
+  /** One compacting store loop under the live-compactor case: where its
+    * store lives, where a compactor stages, how to land drop k and run
+    * the loop once, and how many drops the store has ingested. */
+  private case class CompactingLoop(name: String, store: String => String,
+                                    stage: String => String,
+                                    runOnce: (String, Int) => Unit,
+                                    ingested: String => Long)
+
+  private def textLoop(name: String, storeName: String)(
+      start: (org.apache.spark.sql.DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery) =
+    CompactingLoop(name,
+      store = root => s"$root/$storeName",
+      stage = root => s"$root/$storeName/.compact_tmp2_0",
+      runOnce = { (root, k) =>
+        Seq((k.toLong, s"drop $k " + Seq.fill(8)(s"w$k").mkString(" ")))
+          .toDF("doc_id", "text").write.mode("append").parquet(s"$root/src")
+        val schema = Seq((0L, "")).toDF("doc_id", "text").schema
+        start(spark.readStream.schema(schema).parquet(s"$root/src"), root).awaitTermination()
+      },
+      // committed verdict partitions: a winnow drop may report no pairs
+      ingested = root => Files.list(Paths.get(s"$root/out"))
+        .filter(d => Files.exists(d.resolve("_SUCCESS"))).count())
+
+  private lazy val annEmb = (0L until 8L).map { i =>
+    val base = if (i % 2 == 0) 1.0f else -1.0f
+    (i, Array.tabulate(8)(d => base * (1.0f + 0.01f * (i + d))))
+  }.toDF("vec_id", "embedding")
+
+  private val compactingLoops = Seq(
+    textLoop("crawl", "bands")((src, root) => IncrementalDedup.run(src, cfg,
+      s"$root/bands", s"$root/out", s"$root/ckpt", compactEvery = 4)),
+    textLoop("winnow", "fps")((src, root) => IncrementalDedup.runWinnow(src,
+      IncrementalDedup.WinnowConfig("doc_id", "text"),
+      s"$root/fps", s"$root/out", s"$root/ckpt", compactEvery = 4)),
+    CompactingLoop("ANN",
+      store = root => s"$root/ix",
+      stage = root => s"$root/ix/codes/.compact_tmp_0",
+      runOnce = { (root, k) =>
+        if (k == 0) graft.operators.AnnIndex.buildIvfPq(annEmb.filter(col("vec_id") < 4),
+          "vec_id", "embedding", dim = 8, m = 2, k = 4, nCentroids = 4, dir = s"$root/ix")
+        annEmb.filter(col("vec_id") === 4L + k).write.mode("append").parquet(s"$root/src")
+        graft.operators.AnnIndex.runIngest(
+          spark.readStream.schema(annEmb.schema).parquet(s"$root/src"),
+          s"$root/ix", "vec_id", "embedding", dim = 8, m = 2,
+          checkpointDir = s"$root/ckpt", compactEvery = 4).awaitTermination()
+      },
+      ingested = root => graft.operators.AnnIndex.servableIngests(spark, s"$root/ix")
+        .count(_.startsWith("batch_")).toLong))
+
+  compactingLoops.foreach { loop =>
+    test(s"the ${loop.name} loop's recovery refuses to discard a live out-of-band compactor's stage") {
+      val root = Files.createTempDirectory(s"graft_leaseloop_${loop.name}").toString
+      loop.runOnce(root, 0)
+      // an out-of-band compactor is MID-STAGING: its stage dir stands and
+      // it holds the store lease. An unleased recovery would discard the
+      // live stage as a "crash"; the turn must instead fail loudly at
+      // acquire, naming the holder, and leave the stage alone.
+      val stage = Paths.get(loop.stage(root))
+      Files.createDirectory(stage)
+      val h = graft.operators.StoreLease.acquire(spark, loop.store(root), "oob-compactor")
+      val e = intercept[Exception](loop.runOnce(root, 1))
+      def chain(t: Throwable): Seq[String] =
+        if (t == null) Nil else t.getMessage +: chain(t.getCause)
+      assert(chain(e).filter(_ != null).exists(m =>
+        m.contains("oob-compactor") && m.contains("under maintenance")),
+        s"expected a loud lease refusal, got: ${chain(e)}")
+      assert(Files.exists(stage), "the refused turn must leave the live stage standing")
+      // compactor done: lease released, stage (unarmed) left to recovery —
+      // the replayed turn heals it under its own lease and proceeds
+      graft.operators.StoreLease.release(spark, h)
+      loop.runOnce(root, 2)
+      assert(!Files.exists(stage))
+      assert(loop.ingested(root) == 3)
+    }
   }
 
   test("in-loop compaction (compactEvery) folds history inside the stream; verdicts unchanged") {
